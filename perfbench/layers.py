@@ -15,7 +15,7 @@ import os
 import time
 
 from perfbench.sparkstats import StatementStats
-from perfbench.trace import Tracer, median, percentile
+from perfbench.trace import Tracer, percentile
 from perfbench.workloads import THREADS
 
 # name: (unit, better, the phase metric it should move). The phases are
@@ -130,7 +130,7 @@ def _log_bytes(engines) -> int:
 
 
 def _metrics(run, stats: dict, flushed: int, scan: tuple, log_bytes: int,
-             start_times: list) -> dict:
+             start_s: float) -> dict:
     def ratio(name):
         infos = run.infos(name)
         return sum(1 for i in infos if i) / len(infos) if infos else 0.0
@@ -144,7 +144,7 @@ def _metrics(run, stats: dict, flushed: int, scan: tuple, log_bytes: int,
     fires = run.durations("events.fire")
     hits, misses = scan
     m = {
-        "session.start_s": median(start_times),
+        "session.start_s": start_s,
         "session.scan_cache_hit_ratio": hits / (hits + misses) if hits + misses else 0.0,
         "project.load_s": run.total_s("project.load"),
         "plans.parse_s": run.total_s("plans.parse"),
@@ -178,7 +178,7 @@ def _metrics(run, stats: dict, flushed: int, scan: tuple, log_bytes: int,
     return {k: (v, PER_LAYER[k][0]) for k, v in m.items()}
 
 
-def traced_iterations(wl, n: int, start_times: list) -> dict:
+def traced_iterations(wl, n: int, start_s: float) -> dict:
     from dbt_spark.session import scan_cache_stats
 
     tracer = Tracer()
@@ -200,7 +200,7 @@ def traced_iterations(wl, n: int, start_times: list) -> dict:
             scan = (scan_cache_stats["hits"] - scan0[0], scan_cache_stats["misses"] - scan0[1])
             per_run.append(_metrics(
                 tracer.summary(tracer.run_id), dict(wl.stats.totals),
-                sum(flushes[n_flush:]), scan, _log_bytes(wl.engines()) - log0, start_times))
+                sum(flushes[n_flush:]), scan, _log_bytes(wl.engines()) - log0, start_s))
     finally:
         wl.stats = None
         tracer.uninstall()

@@ -4,25 +4,26 @@
 
 Run from the root of a source tree. One process is one closed-loop client:
 it writes the workload's inputs from ``--seed`` under ``.perfbench_work/``,
-starts a Spark session ``local[<cores>]`` with a driver heap sized to the
-machine, sets up (session start plus a scan of every input table) several
-times, warms up and checks correctness outside the timed region, then runs
-timed iterations for ``--seconds`` and checks the outputs again.
+sets up once (launches the JVM, starts a Spark session ``local[<cores>]``
+with a driver heap sized to the machine, and runs the workload's warm-up
+passes), checks correctness outside the timed region, then runs timed
+iterations for ``--seconds`` and checks the outputs again.
 
 The last stdout line is the result: ``{"correct", "attempted", "failed",
 "metrics"}``. With ``--trace 0`` the metrics are the end-to-end ones
-(``setup_s``, ``iter_s``); with ``--trace 1`` the untimed
-loop is followed by two traced iterations whose per-layer metrics are
-reported. The line before it is a report with every phase metric (median,
-quartiles and sample count), the error rate, the environment, the tracing
-overhead and, when traced, any count that did not repeat between the two
-traced iterations. The exit code is non-zero when any output is wrong.
+(``setup_s``, ``iter_s``); with ``--trace 1`` the timed loop is followed by
+two traced iterations, whose per-layer metrics are reported instead. The
+line before it is a report with every phase metric (median, quartiles and
+sample count), the error rate, the environment, the share of the machine's
+CPU time its hypervisor took during the timed loop (steal: it slows the
+loop without any change in the program), the tracing overhead and, when
+traced, any count that did not repeat between the two traced iterations.
+The exit code is non-zero when any output is wrong.
 """
 
 from __future__ import annotations
 
 import argparse
-import hashlib
 import json
 import os
 import shutil
@@ -34,7 +35,6 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
-SETUP_ROUNDS = 5
 TRACED_ITERATIONS = 2
 
 
@@ -58,21 +58,33 @@ def _env(work: str) -> dict:
 
 
 def _source_id() -> str:
+    """The commit of the source tree, or "unknown" outside a git checkout."""
     try:
-        out = subprocess.run(["git", "-C", ROOT, "rev-parse", "HEAD"], capture_output=True,
-                             text=True, timeout=10)
-        if out.returncode == 0:
-            return out.stdout.strip()
+        out = subprocess.run(["git", "-C", ROOT, "rev-parse", "--show-toplevel", "HEAD"],
+                             capture_output=True, text=True, timeout=10)
     except (OSError, subprocess.SubprocessError):
-        pass
-    h = hashlib.sha256()
-    for base, dirs, files in sorted(os.walk(os.path.join(ROOT, "dbt_spark"))):
-        dirs.sort()
-        for f in sorted(files):
-            if f.endswith((".py", ".sql")):
-                with open(os.path.join(base, f), "rb") as fh:
-                    h.update(f.encode() + fh.read())
-    return "tree-sha256:" + h.hexdigest()[:16]
+        return "unknown"
+    lines = out.stdout.split()
+    if out.returncode or len(lines) != 2 or os.path.realpath(lines[0]) != os.path.realpath(ROOT):
+        return "unknown"
+    return lines[1]
+
+
+def _cpu_jiffies() -> tuple[int, int] | None:
+    """(steal, total) CPU time of the machine from /proc/stat, if any."""
+    try:
+        with open("/proc/stat") as f:
+            fields = [int(x) for x in f.readline().split()[1:]]
+    except (OSError, ValueError):
+        return None
+    return (fields[7] if len(fields) > 7 else 0), sum(fields[:8])
+
+
+def _steal_share(before, after) -> float | None:
+    """Share of the machine's CPU time taken by its hypervisor in between."""
+    if before is None or after is None or after[1] == before[1]:
+        return None
+    return (after[0] - before[0]) / (after[1] - before[1])
 
 
 def _hwm_mb(pid) -> float:
@@ -89,25 +101,6 @@ def _quartiles(values: list[float]) -> dict:
     else:
         q1 = q2 = q3 = values[0]
     return {"median": statistics.median(values), "q1": q1, "q3": q3, "n": len(values)}
-
-
-def _setup(sf_dir: str, rounds: int):
-    """Session (re)start plus one count over the largest input table,
-    ``rounds`` times; the first round also launches the JVM. Returns the
-    session, the seconds of each round and the seconds of each session
-    start."""
-    from dbt_spark.session import get_spark
-
-    spark, rounds_s, starts_s = None, [], []
-    for _ in range(rounds):
-        t0 = time.perf_counter()
-        if spark is not None:
-            spark.stop()
-        spark = get_spark("perfbench")
-        starts_s.append(time.perf_counter() - t0)
-        spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).count()
-        rounds_s.append(time.perf_counter() - t0)
-    return spark, rounds_s, starts_s
 
 
 def _stop_jvm() -> None:
@@ -198,23 +191,30 @@ def _run(args, work: str, env: dict, workloads):
     wl = cls(work, data_dir, args.seed)
     wl.prepare()
 
-    spark, setup_times, start_times = _setup(data_dir, SETUP_ROUNDS)
-    wl.spark = spark
+    from dbt_spark.session import get_spark
+
     t0 = time.perf_counter()
+    spark = wl.spark = get_spark("perfbench")  # launches the JVM
+    started = time.perf_counter()
     wl.warm()
-    warm_s = time.perf_counter() - t0
+    warmed = time.perf_counter()
+    setup_s, start_s = warmed - t0, started - t0
+    wl.check(final=False)
+    jiffies = _cpu_jiffies()
     walls, phases = _timed_loop(wl, args.seconds)
+    steal = _steal_share(jiffies, _cpu_jiffies())
     iter_s = wl.iter_value(walls)
-    wl.check()
+    wl.check(final=True)
 
     jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
     report = {
         "workload": args.workload, "seed": args.seed, "sf": workloads.SF,
         "seconds": args.seconds, "threads": workloads.THREADS, **env,
         "source": _source_id(),
-        "setup_rounds_s": setup_times, "session_starts_s": start_times,
-        "warmup_s": warm_s,
-        "iter_s": iter_s, "iterations_s": _quartiles(walls),
+        "setup_s": setup_s, "session_start_s": start_s,
+        "warmup_s": warmed - started,
+        "cpu_steal_share": steal,
+        "iter_s": iter_s, "iterations_s": {**_quartiles(walls), "each": walls},
         "phases": {k: {**_quartiles(v), "unit": "s"} for k, v in phases.items()},
         "peak_rss_mb": _hwm_mb(jvm_pid) + _hwm_mb("self"),
         "attempted": wl.attempted, "failed": wl.failed,
@@ -222,13 +222,13 @@ def _run(args, work: str, env: dict, workloads):
         "problems": wl.problems, **wl.notes,
     }
     metrics = {
-        "setup_s": {"value": statistics.median(setup_times), "unit": "s"},
+        "setup_s": {"value": setup_s, "unit": "s"},
         "iter_s": {"value": iter_s, "unit": "s"},
     }
     if args.trace:
         from perfbench import layers
 
-        traced = layers.traced_iterations(wl, TRACED_ITERATIONS, start_times)
+        traced = layers.traced_iterations(wl, TRACED_ITERATIONS, start_s)
         report["trace_overhead_s"] = {
             "iter_s": statistics.median(traced["walls"]) - statistics.median(walls),
             **{k: statistics.median(v) - statistics.median(phases[k])

@@ -1,11 +1,11 @@
 """Spark job and stage metrics for one statement (a query or an invocation).
 
-``StatementStats.measure(label, fn)`` runs ``fn`` under a job group of its
-own, then reads every job that started meanwhile from the application status
-store, and each job's stages with ``lastStageAttempt``, before the next
-statement runs: the store keeps only ``spark.ui.retainedStages`` stages, so
-collecting after a whole pass would lose the early ones. Jobs are found by
-id rather than by group because engine worker threads set their own group.
+``StatementStats.measure(fn)`` runs ``fn``, then reads every job that
+started meanwhile from the application status store, and each job's stages
+with ``lastStageAttempt``, before the next statement runs: the store keeps
+only ``spark.ui.retainedStages`` stages, so collecting after a whole pass
+would lose the early ones. Jobs are found by id rather than by job group
+because engine worker threads set their own group.
 """
 
 from __future__ import annotations
@@ -43,17 +43,12 @@ class StatementStats:
         jobs = self.store.jobsList(None)
         return jobs.apply(0).jobId() if jobs.size() else -1
 
-    def measure(self, label: str, fn):
-        self.sc.setJobGroup(f"perfbench:{label}", label)
+    def measure(self, fn):
         t0 = time.time()
         try:
             return fn()
         finally:
-            wall_ms = (time.time() - t0) * 1000.0
-            self.sc.setJobGroup("", "")
-            self.sc.setLocalProperty("spark.jobGroup.id", None)
-            self.sc.setLocalProperty("spark.job.description", None)
-            self._collect(wall_ms)
+            self._collect((time.time() - t0) * 1000.0)
 
     def _collect(self, wall_ms: float) -> None:
         # the status store is fed by an asynchronous listener bus: let it

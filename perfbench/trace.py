@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import functools
 import json
-import statistics
 import sys
 import threading
 import time
@@ -181,7 +180,3 @@ def percentile(values: list[float], q: float) -> float:
     v = sorted(values)
     k = max(0, min(len(v) - 1, int(-(-q * len(v) // 100)) - 1))
     return v[k]
-
-
-def median(values: list[float]) -> float:
-    return statistics.median(values) if values else 0.0
