@@ -13,9 +13,7 @@ structured-log line shape::
               "pid": 123, "thread": "MainThread", "ts": "..."}}
 
 so log consumers that key on ``info.name`` / ``info.code`` parse these lines
-unchanged. Protobuf is optional by design: if ``google.protobuf`` is absent
-(this container), the JSON path is the only emitter — there is no behavioral
-difference, only the wire encoding of the optional mirror.
+unchanged. As in the reference, the file log is JSON lines or text only.
 """
 
 from __future__ import annotations
@@ -71,6 +69,9 @@ EVENT_CODES: dict[str, tuple[str, str]] = {
     "RunResultError": ("Z024", "error"),          # types.py:1964
     "EndOfRunSummary": ("Z030", "info"),          # types.py:2002
 }
+
+# Severity order for the --log-level-file filter; unknown levels rank as info.
+_LEVEL_RANK = {"debug": 0, "info": 1, "warn": 2, "error": 3}
 
 # Human message templates per event name (reference: each event class's
 # message(); we keep the load-bearing fields, not the exact prose).
@@ -330,20 +331,12 @@ class EventBus:
         self.callbacks: list[Callable[[Event], None]] = []
         self._lock = threading.Lock()
         self._log_fh = None  # persistent JSONL handle (_write_log_line)
-        self._pb_write = None
         if log_path:
             os.makedirs(os.path.dirname(log_path), exist_ok=True)
-            # optional protobuf wire mirror (reference core_types_pb2):
-            # length-delimited CoreEventInfo beside the JSON lines, only when
-            # google.protobuf is importable (dbt_spark/protowire.py)
-            from dbt_spark.protowire import delimited_writer
-
-            self._pb_write = delimited_writer(
-                os.path.splitext(log_path)[0] + ".pb")
 
     def _write_log_line(self, line: str) -> None:
         """Append one line to the JSONL log through a PERSISTENT handle —
-        open-per-event was measured at ~50 us x 2 files x 6 events/node,
+        open-per-event was measured at ~50 us x 6 events/node,
         a visible slice of the 2,000-model run. Flushed per line so
         ``tail -f`` and crash forensics behave like the open-per-append
         form; rotation (--log-file-max-bytes) tracks the size via the
@@ -352,21 +345,21 @@ class EventBus:
         if fh is None:
             fh = self._log_fh = open(self.log_path, "a")
             fh.seek(0, os.SEEK_END)  # make tell() the true size pre-write
-        if self.max_bytes:
+        if self.max_bytes and fh.tell() + len(line) > self.max_bytes:
+            fh.close()
             try:
-                if fh.tell() + len(line) > self.max_bytes:
-                    fh.close()
-                    os.replace(self.log_path, self.log_path + ".1")
-                    fh = self._log_fh = open(self.log_path, "a")
+                os.replace(self.log_path, self.log_path + ".1")
             except OSError:
-                pass
+                pass  # rotation failed: keep appending to the unrotated log
+            fh = self._log_fh = open(self.log_path, "a")
         fh.write(line)
         fh.flush()
 
-    def fire(self, name: str, level: Optional[str] = None, **data: Any) -> Event:
+    def _event(self, name: str, level: Optional[str],
+               data: dict[str, Any]) -> Event:
         code, default_level = EVENT_CODES.get(name, ("", "info"))
         render = _MSG.get(name)
-        ev = Event(
+        return Event(
             name=name,
             data=data,
             level=level or default_level,
@@ -376,8 +369,11 @@ class EventBus:
             msg=render(data) if render else data.get("msg", ""),
             thread=threading.current_thread().name,
         )
-        rank = {"debug": 0, "info": 1, "warn": 2, "error": 3}
-        to_file = rank.get(ev.level, 1) >= rank.get(self.file_level, 0)
+
+    def fire(self, name: str, level: Optional[str] = None, **data: Any) -> Event:
+        ev = self._event(name, level, data)
+        to_file = (_LEVEL_RANK.get(ev.level, 1)
+                   >= _LEVEL_RANK.get(self.file_level, 0))
         with self._lock:
             if self.log_path and to_file:
                 # serialize only when the line is actually written — the
@@ -388,10 +384,6 @@ class EventBus:
                 else:
                     line = json.dumps(ev.to_dict(), default=str) + "\n"
                 self._write_log_line(line)
-            if self._pb_write is not None and to_file:
-                # the .pb stream mirrors the JSON file log, so it honors
-                # the same level filter
-                self._pb_write(ev.to_dict()["info"])
             for cb in self.callbacks:
                 cb(ev)
         return ev
@@ -410,14 +402,5 @@ class EventBus:
         if opts.silenced(name):
             return None
         if warn_error or opts.includes(name):
-            code, _ = EVENT_CODES.get(name, ("", "warn"))
-            render = _MSG.get(name)
-            ev = Event(
-                name=name, data=data, level="error",
-                ts=datetime.now(timezone.utc).isoformat(),
-                invocation_id=self.invocation_id, code=code,
-                msg=render(data) if render else data.get("msg", ""),
-                thread=threading.current_thread().name,
-            )
-            raise WarnErrorPromotion(ev)
+            raise WarnErrorPromotion(self._event(name, "error", data))
         return self.fire(name, level="warn", **data)

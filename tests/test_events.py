@@ -101,6 +101,30 @@ def test_log_line_shape_matches_published_format(log_lines):
     assert len({ln["info"]["invocation_id"] for ln in log_lines}) == 1
 
 
+def test_protobuf_wire_roundtrip(project_dir, spark):
+    """The identity fields dbt's CoreEventInfo carries on the wire
+    (core/dbt/events/core_types.proto:9-20) round-trip through the JSON
+    lines log: the engine's invocation_id and the reference event codes.
+    The file log is JSON lines only, as in the reference: no protobuf
+    mirror is written beside it."""
+    root = project_dir({
+        "dbt_project.yml": "name: pbw\n",
+        "models/m1.sql": "select 1 as id",
+    })
+    eng = Engine(root, spark=spark)
+    assert eng.invoke(["run"]).success
+    log_dir = os.path.join(root, "target", "logs")
+    jlines = [json.loads(l) for l in open(
+        os.path.join(log_dir, "dbt.log.jsonl")) if l.strip()]
+    assert {ln["info"]["invocation_id"] for ln in jlines} == {
+        eng.events.invocation_id}
+    by_name = {ln["info"]["name"]: ln["info"] for ln in jlines}
+    mrv = by_name["MainReportVersion"]
+    assert mrv["code"] == "A001" and mrv["invocation_id"] == eng.events.invocation_id
+    assert by_name["NodeFinished"]["code"] == "Q025"
+    assert not os.path.exists(os.path.join(log_dir, "dbt.log.pb"))
+
+
 def test_bus_callbacks_and_levels(tmp_path):
     bus = EventBus(str(tmp_path / "logs" / "x.jsonl"))
     seen = []
@@ -115,6 +139,23 @@ def test_bus_callbacks_and_levels(tmp_path):
     ev3 = bus.fire("AdHocThing", payload=1)
     assert ev3.code == ""
     assert len(seen) == 3
+
+
+def test_failed_rotation_keeps_appending(tmp_path, monkeypatch):
+    """--log-file-max-bytes rotation whose rename fails must not break
+    fire: the bus keeps appending to the unrotated log, losing no line."""
+    def refuse(src, dst):
+        raise PermissionError(f"cannot rename {src}")
+
+    monkeypatch.setattr(os, "replace", refuse)
+    path = tmp_path / "logs" / "x.jsonl"
+    bus = EventBus(str(path), max_bytes=200)  # every line overflows it
+    ids = [f"model.p.m{i}" for i in range(5)]
+    for node_id in ids:
+        bus.fire("NodeStart", node_id=node_id)
+    lines = [json.loads(ln) for ln in path.read_text().splitlines()]
+    assert [ln["data"]["node_id"] for ln in lines] == ids
+    assert not (tmp_path / "logs" / "x.jsonl.1").exists()
 
 
 def test_nothing_to_do_event_on_empty_selection(project_dir, spark):
@@ -234,183 +275,3 @@ def test_spark_job_description_tags_nodes(project_dir, spark):
     assert desc is not None and desc.startswith("model.jd.m1 invocation_id=")
     assert eng.events.invocation_id in desc
     assert after["model.jd.m1"] in (None, "")
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor_pb2  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def test_protobuf_wire_roundtrip(project_dir, spark):
-    """The bus writes length-delimited CoreEventInfo messages
-    (wire-compatible field numbers/types with
-    core/dbt/events/core_types.proto:9-20) to dbt.log.pb — via
-    google.protobuf when importable, else the vendored pure-Python wire
-    encoder (same bytes); round-trip one."""
-    from dbt_spark.protowire import read_delimited
-
-    root = project_dir({
-        "dbt_project.yml": "name: pbw\n",
-        "models/m1.sql": "select 1 as id",
-    })
-    eng = Engine(root, spark=spark)
-    assert eng.invoke(["run"]).success
-    msgs = read_delimited(
-        os.path.join(root, "target", "logs", "dbt.log.pb"))
-    jlines = [json.loads(l) for l in open(
-        os.path.join(root, "target", "logs", "dbt.log.jsonl")) if l.strip()]
-    assert len(msgs) == len(jlines)
-    by_name = {m["name"]: m for m in msgs}
-    mrv = by_name["MainReportVersion"]
-    assert mrv["code"] == "A001" and mrv["invocation_id"] == eng.events.invocation_id
-    assert by_name["NodeFinished"]["code"] == "Q025"
-
-
-def test_protowire_writes_pb_with_or_without_protobuf(tmp_path):
-    """The wire mirror no longer gates on google.protobuf: the pure-Python
-    encoder takes over when the library is absent, so the .pb stream is
-    always produced beside the JSON lines."""
-    from dbt_spark.protowire import read_delimited
-
-    bus = EventBus(str(tmp_path / "logs" / "x.jsonl"))
-    bus.fire("NodeStart", node_id="model.p.m")
-    pb_path = str(tmp_path / "logs" / "x.pb")
-    assert os.path.exists(pb_path)
-    msgs = read_delimited(pb_path)
-    assert len(msgs) == 1 and msgs[0]["name"] == "NodeStart"
-    assert msgs[0]["code"] == "Q024"
-    assert msgs[0]["invocation_id"] == bus.invocation_id
-
-
-def test_pure_wire_encoder_roundtrip_and_layout():
-    """The pure-Python proto3 encoder: byte-level layout checks derived from
-    the public wire spec (field 1 string → tag 0x0A, field 6 varint → tag
-    0x30, field 8 nested Timestamp → tag 0x42), default-value skipping, and
-    full round-trip through the pure decoder."""
-    from dbt_spark.protowire import _decode_pure, _encode_pure
-
-    info = {
-        "name": "MainReportVersion", "code": "A001", "msg": "hi",
-        "level": "info", "invocation_id": "abc-123", "pid": 77,
-        "thread": "MainThread", "ts": "2026-01-02T03:04:05.123456+00:00",
-        "category": "",
-    }
-    data = _encode_pure(info)
-    # field 1 (name, LEN): tag byte = (1<<3)|2 = 0x0A, then length, then utf8
-    assert data[0] == 0x0A and data[1] == len("MainReportVersion")
-    assert data[2:2 + data[1]] == b"MainReportVersion"
-    # structural walk of the top-level fields: numbers, wire types, order
-    from dbt_spark.protowire import _read_varint
-
-    seen = []
-    pos = 0
-    while pos < len(data):
-        tag, pos = _read_varint(data, pos)
-        num, wt = tag >> 3, tag & 7
-        seen.append((num, wt))
-        if wt == 0:
-            val, pos = _read_varint(data, pos)
-            if num == 6:
-                assert val == 77  # pid as varint
-        else:
-            assert wt == 2
-            size, pos = _read_varint(data, pos)
-            pos += size
-    # ascending field order; pid=6 varint; ts=8 nested LEN;
-    # category (10) absent because empty (proto3 default skipping)
-    assert seen == [(1, 2), (2, 2), (3, 2), (4, 2), (5, 2), (6, 0),
-                    (7, 2), (8, 2)]
-
-    back = _decode_pure(data)
-    for k in ("name", "code", "msg", "level", "invocation_id", "thread"):
-        assert back[k] == info[k], k
-    assert back["pid"] == 77
-    assert back["ts"] == "2026-01-02T03:04:05.123456"
-    assert back["category"] == ""
-
-
-def test_pure_wire_encoder_varint_boundaries():
-    from dbt_spark.protowire import _read_varint, _varint
-
-    for n in (0, 1, 127, 128, 300, 2**21 - 1, 2**35 + 7):
-        buf = _varint(n)
-        val, pos = _read_varint(buf, 0)
-        assert val == n and pos == len(buf)
-    assert _varint(127) == b"\x7f" and _varint(128) == b"\x80\x01"
-
-
-def test_pure_wire_encoder_negative_values():
-    """Negative int32/int64 encode as the 10-byte two's-complement varint
-    (public encoding spec) — a pre-1970 ts or negative pid must terminate
-    and round-trip, not hang the event bus."""
-    from dbt_spark.protowire import (_decode_pure, _encode_pure,
-                                     _read_varint, _varint)
-
-    # wire-level: -1 is ten 0xFF-ish bytes, reads back as 2^64-1
-    buf = _varint(-1)
-    assert len(buf) == 10
-    val, pos = _read_varint(buf, 0)
-    assert val == (1 << 64) - 1 and pos == 10
-
-    # message-level: negative pid and pre-1970 timestamp round-trip
-    info = {"name": "E", "code": "Z", "msg": "m", "level": "info",
-            "invocation_id": "iv", "pid": -7, "thread": "t",
-            "ts": "1969-12-31T23:59:59.500000+00:00", "category": ""}
-    back = _decode_pure(_encode_pure(info))
-    assert back["pid"] == -7
-    assert back["ts"] == "1969-12-31T23:59:59.500000"
-
-
-GOLDEN_PB = os.path.join(os.path.dirname(__file__), "fixtures",
-                         "golden_events.pb")
-
-GOLDEN_INFOS = [
-    {"name": "MainReportVersion", "code": "A001", "msg": "Running dbt",
-     "level": "info", "invocation_id": "0f7a3e2b", "pid": 4242,
-     "thread": "MainThread", "ts": "2026-03-04T05:06:07.000008+00:00",
-     "category": ""},
-    # negative pid + pre-1970 ts: the 10-byte two's-complement varints
-    {"name": "E", "code": "Z", "msg": "m", "level": "info",
-     "invocation_id": "iv", "pid": -7, "thread": "t",
-     "ts": "1969-12-31T23:59:59.500000+00:00", "category": ""},
-]
-
-
-def test_pure_wire_encoder_matches_golden_pb_bytes():
-    """ALWAYS-ON canonical-bytes check: the committed fixture
-    tests/fixtures/golden_events.pb holds the length-delimited canonical
-    proto3 serialization of two CoreEventInfo messages, derived from the
-    published wire spec (protobuf.dev/programming-guides/encoding) by an
-    INDEPENDENT byte-by-byte construction (tag/varint/length arithmetic
-    written separately from dbt_spark.protowire, not by the code under
-    test). The pure encoder must reproduce each framed message
-    byte-for-byte — including the 10-byte two's-complement varints of a
-    negative pid and a pre-1970 Timestamp.seconds — and the delimited
-    reader must parse the stream back to the source dicts."""
-    from dbt_spark import protowire
-
-    with open(GOLDEN_PB, "rb") as f:
-        blob = f.read()
-    # parse the varint-length framing and compare message bytes exactly
-    msgs, pos = [], 0
-    while pos < len(blob):
-        ln, pos = protowire._read_varint(blob, pos)
-        msgs.append(blob[pos:pos + ln])
-        pos += ln
-    assert len(msgs) == len(GOLDEN_INFOS)
-    for info, golden in zip(GOLDEN_INFOS, msgs):
-        assert protowire._encode_pure(info) == golden, info["name"]
-    # the delimited reader consumes the committed stream
-    decoded = protowire.read_delimited(GOLDEN_PB)
-    assert [d["name"] for d in decoded] == ["MainReportVersion", "E"]
-    assert decoded[0]["pid"] == 4242 and decoded[1]["pid"] == -7
-    assert decoded[1]["ts"].startswith("1969-12-31T23:59:59.500000")
-    # where google.protobuf IS installed, additionally require the
-    # library's own serialization of the same messages to equal the fixture
-    if _has_protobuf():
-        for info, golden in zip(GOLDEN_INFOS, msgs):
-            assert protowire.encode_event_info(info) == golden
